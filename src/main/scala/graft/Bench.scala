@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Json
 import graft.queries.Registry
 
 /** Per-round benchmark main. Emits ONE JSON line:
@@ -245,7 +246,7 @@ object Bench {
       sfDir: String): (String, String) = {
     def obj(kv: Seq[(String, Double)]) =
       kv.map { case (k, v) => s""""$k":${num(v)}""" }.mkString("{", ",", "}")
-    val es = errors.map(e => "\"" + e.replace("\"", "'") + "\"").mkString("[", ",", "]")
+    def strs(ss: Seq[String]) = ss.map(Json.quote).mkString("[", ",", "]")
     val total = queryTimes.map(_._2).sum
     val auditTotal = auditTimes.map(_._2).sum
     // decision-grade stamp gate. Monolith tier: a run whose reps
@@ -255,17 +256,16 @@ object Bench {
     // collect MIN_CLEAN sub-MAX_STEAL reps within its tries is
     // `exhausted` and listed here — either way the stamp CANNOT be
     // silently round-stamped; preflight step 5 reads these fields.
-    val dm = dirtyMetrics.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":${obj(queryTimes)},""" +
         s""""audit_total":${num(auditTotal)},"audit_queries":${obj(auditTimes)},""" +
         s""""query_steal_pct":${num(querySteal)},"audit_steal_pct":${num(auditSteal)},""" +
         s""""steal_pct_window":${num(windowSteal)},""" +
-        s""""protocol":"$protocol","all_clean":$allClean,""" +
+        s""""protocol":${Json.quote(protocol)},"all_clean":$allClean,""" +
         s""""pipeline":${obj(pipeline)},""" +
         s""""pipeline_gauges":${obj(gauges)},""" +
-        s""""dirty":${dirtyMetrics.nonEmpty},"dirty_metrics":$dm,""" +
-        s""""errors":$es,"detail_file":"BENCH_DETAIL.json","sf":"$sfDir"}"""
+        s""""dirty":${dirtyMetrics.nonEmpty},"dirty_metrics":${strs(dirtyMetrics)},""" +
+        s""""errors":${strs(errors)},"detail_file":"BENCH_DETAIL.json","sf":${Json.quote(sfDir)}}"""
     val detailJson =
       s"""{"corpus":${obj(corpus)},""" +
         s""""pipeline_spread":${obj(pipelineSpread)},""" +

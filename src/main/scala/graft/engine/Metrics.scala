@@ -28,6 +28,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 final class GraftMetrics {
   val messageCount = new AtomicLong
   val errorCount = new AtomicLong
+  val windowManagerErrors = new AtomicLong
   val sinkFlushCount = new AtomicLong
   val sinkFlushRows = new AtomicLong
   val batchCount = new AtomicLong
@@ -99,6 +100,7 @@ final class GraftMetrics {
     batchSeconds.add(seconds)
   }
   def recordError(): Unit = errorCount.incrementAndGet()
+  def recordWindowManagerError(): Unit = windowManagerErrors.incrementAndGet()
   def recordFlush(rows: Long): Unit = {
     sinkFlushCount.incrementAndGet()
     sinkFlushRows.addAndGet(rows)
@@ -110,6 +112,8 @@ final class GraftMetrics {
       s"# HELP $name $help\n# TYPE $name counter\n$name $v\n"
     m("sqlflow_message_count", "messages consumed", messageCount.get) +
       m("sqlflow_error_count", "messages/batches errored", errorCount.get) +
+      m("sqlflow_window_manager_errors_total", "window-manager polls failed",
+        windowManagerErrors.get) +
       m("sqlflow_sink_flush_count", "sink flushes", sinkFlushCount.get) +
       m("sqlflow_sink_flush_rows", "rows flushed to sinks", sinkFlushRows.get) +
       m("sqlflow_batch_count", "micro-batches processed", batchCount.get) +
@@ -207,7 +211,7 @@ final class MetricsServer(spark: SparkSession, metrics: GraftMetrics, port: Int)
           catch {
             case e: Exception =>
               respond(ex, 400,
-                s"""{"error":${ujsonEscape(e.getMessage)}}""")
+                s"""{"error":${Json.quote(e.getMessage)}}""")
           }
       }
     })
@@ -216,15 +220,6 @@ final class MetricsServer(spark: SparkSession, metrics: GraftMetrics, port: Int)
   }
 
   def stop(): Unit = if (server != null) server.stop(0)
-
-  private def ujsonEscape(s: String): String =
-    "\"" + Option(s).getOrElse("").flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def respond(ex: HttpExchange, code: Int, body: String,
       contentType: String = "application/json"): Unit = {

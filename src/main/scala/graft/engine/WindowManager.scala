@@ -1,5 +1,7 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Tumbling-window manager (`sqlflow/managers/window.py:20-90`):
@@ -30,6 +32,7 @@ final class TumblingWindowManager(
   require(deleteSpec.table == table.name,
     s"delete targets ${deleteSpec.table}, manager owns ${table.name}")
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   @volatile private var running = false
   private var thread: Thread = _
 
@@ -87,16 +90,26 @@ final class TumblingWindowManager(
     }
   }
 
-  def start(): Unit = {
+  /** Polls until [[stop]]. A failed poll is logged, counted in
+    * `metrics` and retried at the next interval; `stop()`'s interrupt,
+    * in the sleep or in a poll it cuts short, ends the thread cleanly.
+    * A cut-short poll may surface as any exception with the interrupt
+    * flag cleared, so the loop skips the sleep once `running` is false. */
+  def start(metrics: GraftMetrics): Unit = {
     running = true
     thread = new Thread(() => {
-      while (running) {
-        try flush()
-        catch { case e: Throwable =>
-          System.err.println(s"[window-manager] poll failed: ${e.getMessage}")
+      try {
+        while (running) {
+          try flush()
+          catch { case NonFatal(e) =>
+            if (running) {
+              metrics.recordWindowManagerError()
+              log.warn(s"window-manager poll of ${table.name} failed", e)
+            }
+          }
+          if (running) Thread.sleep(conf.pollIntervalSeconds * 1000L)
         }
-        Thread.sleep(conf.pollIntervalSeconds * 1000L)
-      }
+      } catch { case _: InterruptedException => () }
     }, s"tumbling-window-${table.name}")
     thread.setDaemon(true)
     thread.start()
@@ -104,6 +117,9 @@ final class TumblingWindowManager(
 
   def stop(): Unit = {
     running = false
-    if (thread != null) thread.interrupt()
+    if (thread != null) {
+      thread.interrupt()
+      thread.join()
+    }
   }
 }

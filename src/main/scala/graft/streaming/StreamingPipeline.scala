@@ -146,7 +146,7 @@ object StreamingPipeline {
     // spawn the manager poll threads (reference lifecycle.start →
     // handle_managed_tables): closed windows must drain on their own
     // timer for an unbounded run, not only at shutdown
-    session.managers.foreach(_.start())
+    session.managers.foreach(_.start(metrics))
     // pipeline-level state_store: honored for EVERY daemon start, not
     // just the NativeWindow path — the backend is snapshotted into the
     // query's cloned session at start (StateStores), so any stateful
@@ -470,7 +470,18 @@ object StreamingPipeline {
     Running(query, session, source.onStop, batches)
   }
 
-  /** One micro-batch: decode (error-policied), run handler, sink. */
+  /** One micro-batch: decode (error-policied), run handler, sink.
+    *
+    * The decode makes one pass over one batch-scoped cache of the raw
+    * values: schema inference over the cached value strings is the
+    * batch's first Spark job (it fetches the offsets, fills the cache
+    * and infers the schema), and the decoded frame is a lazy parse of
+    * that cache. Trade-off: a handler whose plan scans `batch` k times
+    * parses it k times from the cache, where a cache of the parsed rows
+    * would parse it once. Spark inlines a CTE over `batch` into each
+    * reader, so one `FROM batch` can be several scans:
+    * examples/funnel.analytics.yml's plan scans it six times. The DLQ
+    * branch reads the batch twice, only when it holds malformed rows. */
   private[graft] def processBatch(
       spark: SparkSession,
       session: Invoke.Session,
@@ -484,50 +495,41 @@ object StreamingPipeline {
     session.refreshFileViews()
     val metaCols = raw.schema.fieldNames.filter(_.startsWith("kafka_")).toSeq
     // decode: per-batch JSON schema inference over the value strings,
-    // then a per-row from_json against that schema so the kafka_*
-    // metadata columns stay attached to every decoded row — the
-    // reference injects them so handler SQL can reference them
-    // (handlers.py InferredMemBatch.write).
+    // then a per-row parse against that schema. On the metadata path
+    // the parse is a from_json, so the kafka_* columns stay attached to
+    // every decoded row — the reference injects them so handler SQL can
+    // reference them (handlers.py InferredMemBatch.write).
     // NB: inside foreachBatch `raw` is bound to a CLONED SparkSession;
     // the handler registers `batch` as a temp view, which must land in
     // the outer session's catalog. In the fast path `spark.read.json`
     // rebinds the result to the outer session by construction; only the
     // metadata path (from_json derivation stays clone-bound) needs the
     // RDD bridge. Per-batch cost here is dominated by the NUMBER of
-    // sequential actions, not data volume (measured with
-    // tools/DecodeProbe: ~50-200 ms per mini-job at 50k msgs) — so the
-    // batch is counted once through the cache instead of a separate
-    // isEmpty probe, and no speculative repartition is added (a 12 MB
-    // shuffle costs more than single-partition parsing saves).
+    // sequential Spark jobs, not data volume, so the decode starts one
+    // (inference, which also fills the batch's only cache) and adds no
+    // speculative repartition (a 12 MB shuffle costs more than
+    // single-partition parsing saves).
     val values =
       (if (metaCols.isEmpty) raw.toDF()
        else spark.createDataFrame(raw.toDF().rdd, raw.schema)).cache()
-    var parsed: DataFrame = null
     try {
-      if (values.count() == 0L) return
       val strings = values.select(col("value").cast("string").as("value"))
         .as(org.apache.spark.sql.Encoders.STRING)
-      parsed = (if (metaCols.isEmpty) {
-        // no metadata to carry → single-parse fast path
-        spark.read
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", "_corrupt_record")
-          .json(strings)
-      } else {
-        // infer once, then re-parse per-row so kafka_* stays attached
-        // (two passes over the batch — the price of metadata columns)
-        val inferred = spark.read
-          .option("mode", "PERMISSIVE")
-          .option("columnNameOfCorruptRecord", "_corrupt_record")
-          .json(strings)
-          .schema
-        values
+      def reader = spark.read
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+      val inferred = reader.json(strings).schema
+      // nothing inferred: an empty batch, or one of blank values — only
+      // then is it worth a job to tell the two apart
+      if (inferred.isEmpty && values.isEmpty) return
+      val parsed =
+        if (metaCols.isEmpty) reader.schema(inferred).json(strings)
+        else values
           .withColumn("__graft_payload", from_json(
             col("value").cast("string"), inferred,
             Map("mode" -> "PERMISSIVE",
               "columnNameOfCorruptRecord" -> "_corrupt_record")))
           .select(col("__graft_payload.*") +: metaCols.map(col): _*)
-      }).cache()
       val batch = withPolicy(spark, parsed, policy, session.dlq)
       val written = try {
         // lock: a manager poll must not collect/delete between the
@@ -547,9 +549,7 @@ object StreamingPipeline {
       metrics.recordFlush(math.max(0L, written))
       session.handler.reset()
     } finally {
-      // unpersist BOTH per-batch caches — a long-running daemon must not
-      // accumulate cached micro-batches
-      if (parsed != null) parsed.unpersist()
+      // a long-running daemon must not accumulate cached micro-batches
       values.unpersist()
     }
   }

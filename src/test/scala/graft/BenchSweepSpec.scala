@@ -224,6 +224,21 @@ class BenchSweepSpec extends AnyFunSuite {
     assert(Bench.num(Double.PositiveInfinity) == "-1")
   }
 
+  test("assembleArtifacts escapes error strings: the printed line parses as JSON") {
+    val hostile = "q03 failed: path C:\\tmp\\x said \"no\"\nsecond line\ttab"
+    val (line, _) = Bench.assembleArtifacts(
+      Seq("q01" -> 1.0), Nil, 0.0, 0.0, 0.0, "per-metric-clean-window",
+      allClean = true, Nil, Nil, Nil, Nil, "{}", Nil, Seq(hostile),
+      "/data/sf\\0.1")
+    assert(!line.contains("\n"), line)
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    implicit val fmts: Formats = DefaultFormats
+    val j = parse(line)
+    assert((j \ "errors").extract[Seq[String]] == Seq(hostile))
+    assert((j \ "sf").extract[String] == "/data/sf\\0.1")
+  }
+
   test("sweepStaleTmp deletes old graft_* roots, keeps fresh and foreign dirs") {
     import java.nio.file.Files
     val stale = Files.createTempDirectory("graft_testsweep_stale")

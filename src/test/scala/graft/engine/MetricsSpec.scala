@@ -35,6 +35,65 @@ class MetricsSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("window-manager poll failures are counted in /metrics and polling continues") {
+    val table = StateTable.fromDdl(spark,
+      "CREATE TABLE wm_fail (bucket TIMESTAMP, n INT)")
+    val manager = new TumblingWindowManager(spark, table, TumblingWindowConf(
+      collectClosedWindowsSql = "SELECT * FROM wm_fail_missing",
+      deleteClosedWindowsSql = "DELETE FROM wm_fail WHERE bucket < now()",
+      pollIntervalSeconds = 1), new MemorySink)
+    val m = new GraftMetrics
+    manager.start(m)
+    val poller = scala.jdk.CollectionConverters.SetHasAsScala(
+      Thread.getAllStackTraces.keySet).asScala
+      .find(_.getName == "tumbling-window-wm_fail").get
+    val uncaught = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    poller.setUncaughtExceptionHandler((_, e) => uncaught.set(e))
+    try {
+      // a second failure means the loop outlived the first
+      val deadline = System.currentTimeMillis() + 15000
+      while (m.windowManagerErrors.get < 2 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(m.windowManagerErrors.get >= 2)
+      assert(m.render.contains("sqlflow_window_manager_errors_total "))
+      assert(m.errorCount.get == 0, "sqlflow_error_count counts batches only")
+    } finally manager.stop()
+    // stop() interrupts the sleep: the thread ends, and not by an exception
+    assert(!poller.isAlive)
+    assert(uncaught.get == null, s"poll thread died with ${uncaught.get}")
+  }
+
+  test("window-manager stop() returns at once when its interrupt cuts a poll short") {
+    val table = StateTable.fromDdl(spark,
+      "CREATE TABLE wm_cut (bucket TIMESTAMP, n INT)")
+    // a sink whose write turns the interrupt into an ordinary exception
+    // and clears the flag, as an interrupted I/O call may
+    val writing = new java.util.concurrent.CountDownLatch(1)
+    val sink = new GraftSink {
+      override def write(df: org.apache.spark.sql.DataFrame): Long = {
+        writing.countDown()
+        try Thread.sleep(60000)
+        catch { case _: InterruptedException =>
+          throw new RuntimeException("sink write cut short") }
+        -1L
+      }
+    }
+    val manager = new TumblingWindowManager(spark, table, TumblingWindowConf(
+      collectClosedWindowsSql = "SELECT 1 AS n",
+      deleteClosedWindowsSql = "DELETE FROM wm_cut WHERE bucket < now()",
+      pollIntervalSeconds = 60), sink)
+    val m = new GraftMetrics
+    manager.start(m)
+    try assert(writing.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    finally {
+      val t0 = System.nanoTime()
+      manager.stop()
+      // a sleep after the cut-short poll would hold stop() for 60 s
+      assert((System.nanoTime() - t0) / 1e9 < 10, "stop() waited out a poll interval")
+    }
+    assert(m.windowManagerErrors.get == 0, "a poll cut short by stop() is no failure")
+  }
+
   test("cosine saturation gauge is set by the daemon's fold and rendered (round-10 judge)") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -873,4 +873,185 @@ class StreamingSpec extends SparkTestBase {
       assert(rows.size == 1 && rows.head.contains("\"count\":2"), sink.allRows.toString)
     } finally running.stop()
   }
+
+  // ---- processBatch decode: both paths, every error policy ----------
+
+  // one message corpus for every decode case: a type-widened field
+  // (amount 1 → 2.5), a field present in one message only (extra), an
+  // explicit null, arrays, and one truncated message
+  private val decodeMsgs = Seq(
+    """{"id":1,"city":"Austin","amount":1,"tags":["a"]}""",
+    """{"id":2,"city":"Boston","amount":2.5,"extra":{"k":"v"}}""",
+    """{"id":3,"city":"Austin","amount":null}""",
+    """{"id":4,"city":"Denver","amount":4,"tags":[]}""")
+  private val truncated = """{"id":5,"city":"""
+  private val rowsSql = "SELECT id, city, amount, tags, extra FROM batch ORDER BY id"
+
+  /** Runs one processBatch over `values`, as a kafka_*-carrying batch
+    * when `withMeta` (the source's metadata-bridge path) or as a bare
+    * `value` column; returns the sink rows and the DLQ records without
+    * their wall-clock timestamp. */
+  private def decodeRun(values: Seq[String], withMeta: Boolean,
+      policy: String = "RAISE", sql: String = rowsSql)
+      : (Seq[String], Seq[(String, String, String)]) = {
+    import spark.implicits._
+    val sink = new MemorySink
+    val dlq = new MemorySink
+    val conf = confFromString(
+      s"""pipeline:
+         |  batch_size: 10
+         |  source:
+         |    type: file
+         |    file: {path: '/nonexistent', format: json}
+         |  handler:
+         |    type: 'handlers.InferredMemBatch'
+         |    sql: $sql
+         |  sink: {type: memory}
+         |""".stripMargin)
+    val session = Invoke.buildSession(spark, conf, Some(sink))
+      .copy(dlq = Some(dlq))
+    val raw =
+      if (withMeta) values.zipWithIndex
+        .map { case (v, i) => (v, i.toLong, i % 2, "clicks") }
+        .toDF("value", "kafka_offset", "kafka_partition", "kafka_topic")
+      else values.toDF("value")
+    StreamingPipeline.processBatch(spark, session,
+      ErrorPolicyConf(policy, None), raw)
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    implicit val fmts: Formats = DefaultFormats
+    val dead = dlq.allRows.map { r =>
+      val j = parse(r)
+      ((j \ "error").extract[String], (j \ "message").extract[String],
+        (j \ "phase").extract[String])
+    }
+    (sink.allRows, dead)
+  }
+
+  private def bothPaths(values: Seq[String], policy: String = "RAISE",
+      sql: String = rowsSql) =
+    Seq(false, true).map(m => decodeRun(values, m, policy, sql))
+
+  private val cleanRows = Seq(
+    """{"id":1,"city":"Austin","amount":1.0,"tags":["a"]}""",
+    """{"id":2,"city":"Boston","amount":2.5,"extra":{"k":"v"}}""",
+    """{"id":3,"city":"Austin"}""",
+    """{"id":4,"city":"Denver","amount":4.0,"tags":[]}""")
+
+  private val deadLetter = ("malformed JSON", truncated, "handler.write")
+
+  test("decode: clean batch decodes identically with and without kafka_* columns") {
+    assert(bothPaths(decodeMsgs) == Seq.fill(2)((cleanRows, Nil)))
+  }
+
+  test("decode: RAISE fails the batch on one malformed message") {
+    Seq(false, true).foreach { m =>
+      val e = intercept[IllegalArgumentException](
+        decodeRun(decodeMsgs :+ truncated, m))
+      assert(e.getMessage == "malformed JSON message in batch")
+    }
+  }
+
+  test("decode: IGNORE drops the malformed message and keeps the rest") {
+    assert(bothPaths(decodeMsgs :+ truncated, "IGNORE") ==
+      Seq.fill(2)((cleanRows, Nil)))
+  }
+
+  test("decode: DLQ routes the malformed message and sinks the rest") {
+    assert(bothPaths(decodeMsgs :+ truncated, "DLQ") ==
+      Seq.fill(2)((cleanRows, Seq(deadLetter))))
+  }
+
+  test("decode: an empty batch returns before the handler runs") {
+    assert(bothPaths(Nil) == Seq.fill(2)((Seq.empty[String], Nil)))
+  }
+
+  test("decode: a batch of blank values") {
+    // no message parses to a field: the bare path's reader yields no
+    // rows, the kafka_* path keeps one metadata-only row per message
+    assert(bothPaths(Seq("", "   "), "IGNORE",
+      "SELECT count(*) AS n FROM batch") ==
+      Seq((Seq("""{"n":0}"""), Nil), (Seq("""{"n":2}"""), Nil)))
+  }
+
+  test("decode: a handler that self-joins batch sees the same rows on both sides") {
+    val sql = "SELECT a.id, b.id AS peer FROM batch a JOIN batch b " +
+      "ON a.city = b.city AND a.id < b.id ORDER BY a.id, peer"
+    assert(bothPaths(decodeMsgs :+ truncated, "DLQ", sql) ==
+      Seq.fill(2)((Seq("""{"id":1,"peer":3}"""), Seq(deadLetter))))
+  }
+
+  test("decode job budget: one Spark job decodes a 1,000-message kafka_* batch") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.graftx.Listeners
+    val sc = spark.sparkContext
+    // count only this thread's jobs: a tag in the submitting thread's
+    // local properties rides on every job it starts
+    val tag = "graft.spec.decodeBudget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null)
+          jobs.incrementAndGet()
+    }
+    // the handler's SELECT is lazy, so every job started before the
+    // sink's write belongs to the decode
+    var decodeJobs = -1
+    val memory = new MemorySink
+    val sink = new GraftSink {
+      override def write(df: org.apache.spark.sql.DataFrame): Long = {
+        Listeners.waitUntilListenerBusEmpty(sc)
+        decodeJobs = jobs.get
+        memory.write(df)
+      }
+    }
+    val conf = confFromString(
+      """pipeline:
+        |  batch_size: 1000
+        |  source:
+        |    type: file
+        |    file: {path: '/nonexistent', format: json}
+        |  handler:
+        |    type: 'handlers.InferredMemBatch'
+        |    sql: SELECT city, count(*) AS n FROM batch GROUP BY city ORDER BY city
+        |  sink: {type: memory}
+        |""".stripMargin)
+    val session = Invoke.buildSession(spark, conf, Some(sink))
+    val cities = Seq("Austin", "Boston", "Denver", "Miami", "Seattle")
+    val raw = (0 until 1000).map { i =>
+      (s"""{"seq":$i,"city":"${cities(i % 5)}","event":"click"}""",
+        i.toLong, 0, "clicks")
+    }.toDF("value", "kafka_offset", "kafka_partition", "kafka_topic")
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "1")
+    try StreamingPipeline.processBatch(spark, session, conf.pipeline.onError, raw)
+    finally {
+      sc.setLocalProperty(tag, null)
+      Listeners.waitUntilListenerBusEmpty(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(memory.allRows == cities.map(c => s"""{"city":"$c","n":200}"""))
+    // the decode's one job is schema inference, which also fills the
+    // batch's cache; the rest belong to the GROUP BY ... ORDER BY
+    assert(decodeJobs == 1, "decode jobs")
+    assert(jobs.get == 5, "jobs per batch")
+  }
+
+  test("decode cache hygiene: 20 batches, one failing under RAISE and one empty, leave no cache") {
+    // baseline an empty cache so the assertion sees only processBatch
+    // (the session is shared across suites)
+    spark.sharedState.cacheManager.clearCache()
+    (0 until 20).foreach { i =>
+      val meta = i % 2 == 0
+      i match {
+        case 7 => decodeRun(Nil, meta)
+        case 12 => intercept[IllegalArgumentException](
+          decodeRun(decodeMsgs :+ truncated, meta))
+        case _ => decodeRun(decodeMsgs, meta)
+      }
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "processBatch leaked a cached micro-batch")
+  }
 }
