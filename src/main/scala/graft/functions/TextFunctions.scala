@@ -18,8 +18,8 @@ object TextFunctions {
     * references into higher-order-function bodies, so a derived array
     * referenced inside `transform(..., i -> f(arr, i))` is otherwise
     * RECOMPUTED per element — measured 244s → 0.7s on the winnowing
-    * pipeline at 20k docs (WinnowProbe3; quadratic blowup, not
-    * constant overhead). */
+    * pipeline at 20k docs (quadratic blowup, not constant overhead;
+    * SCALE.md "Round-3 additions"). */
   def bound(c: Column)(body: Column => Column): Column =
     element_at(transform(array(c), body), 1)
 

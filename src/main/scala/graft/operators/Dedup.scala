@@ -866,7 +866,7 @@ object Dedup {
     // toks and grams are let-BOUND (TextFunctions.bound), not aliased
     // columns: projection collapse would inline the alias into every
     // lambda reference and recompute the upstream array per window —
-    // measured 244s vs 0.7s at 20k docs (WinnowProbe3).
+    // measured 244s vs 0.7s at 20k docs (SCALE.md "Round-3 additions").
     val fps = graft.functions.TextFunctions.bound(tokenize(col(textCol))) { t =>
       val grams = when(size(t) >= k,
         transform(sequence(lit(0), size(t) - k),
@@ -895,9 +895,10 @@ object Dedup {
     * an exact verifier ([[jaccardPairs]]-style) or straight to
     * [[connectedComponents]] when fingerprint evidence suffices.
     *
-    * Measured (WinnowProbe, 20k docs ×4 replicas): fingerprint index =
-    * 0.39× the shingle index (the 2/(w+1) theory), pair generation in
-    * family with the full shingle path at 4× smaller index. On
+    * Measured (20k docs ×4 replicas, SCALE.md "Round-3 additions"):
+    * fingerprint index = 0.39× the shingle index (the 2/(w+1) theory),
+    * pair generation in family with the full shingle path at 4×
+    * smaller index. On
     * boilerplate-heavy corpora value-min selection concentrates on the
     * globally smallest hashes; `maxFpFreq` drops fingerprints selected
     * by more than `cap` documents before pair generation — an explicit

@@ -112,13 +112,18 @@ object Tables {
 
   /** Partition count of a pre-AQE physical plan, computed WITHOUT
     * executing it (see the [[spread]] cost note): an exchange fixes the
-    * count, a union sums its children, unary operators pass through,
-    * and anything else (leaf scans, joins) returns None — leaf scans
-    * because file-split counts aren't exposed statically, and their
-    * `.rdd` fallback probe is job-free anyway (no upstream stages to
-    * materialize). Static exchange counts ignore AQE coalescing, which
+    * count, a coalesce gives its declared count, a union sums its
+    * children, other unary operators pass through, and anything else
+    * (leaf scans, joins) returns None — leaf scans because file-split
+    * counts aren't exposed statically, and their `.rdd` fallback
+    * probe is job-free anyway (no upstream stages to materialize).
+    * Static exchange counts ignore AQE coalescing, which
     * can only OVERestimate — the consequence is a skipped repartition,
-    * never a wasted one. */
+    * never a wasted one. A coalesce must not pass through: under
+    * `repartition(n).coalesce(1)` the exchange says n while the frame
+    * runs as one task. Its declared count is exact, or an
+    * overestimate when the child is narrower (a coalesce never
+    * widens). */
   private def staticPartitions(
       p: org.apache.spark.sql.execution.SparkPlan): Option[Int] = p match {
     // the DECLARED target partitioning, not e.numPartitions: the
@@ -127,6 +132,8 @@ object Tables {
     // (measured: a zip-partition crash inside t108's commit plan)
     case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
       Some(e.outputPartitioning.numPartitions)
+    case c: org.apache.spark.sql.execution.CoalesceExec =>
+      Some(c.numPartitions)
     case u: org.apache.spark.sql.execution.UnionExec =>
       val cs = u.children.map(staticPartitions)
       if (cs.forall(_.isDefined)) Some(cs.flatten.sum) else None

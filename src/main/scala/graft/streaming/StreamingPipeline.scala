@@ -126,17 +126,8 @@ object StreamingPipeline {
     }
 
     val writer = source.df.writeStream
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString))
-      .trigger(conf.pipeline.flushIntervalSeconds match {
-        case Some(s) => Trigger.ProcessingTime(s"$s seconds")
-        // no liveness interval configured → fire as soon as data is
-        // available (interval 0), like the reference's consume loop.
-        // A fixed 1s default would CAP throughput at batch_size msgs/s
-        // (measured: the e2e daemon sat pinned at ~49k msgs/s with
-        // 50k-msg batches — the trigger floor, not the work).
-        case None => Trigger.ProcessingTime(0L)
-      })
+      .option("checkpointLocation", checkpointLocation(checkpointDir))
+      .trigger(flushTrigger(conf))
       .foreachBatch { (raw: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         processBatch(spark, session, policy, raw, metrics)
         batches.incrementAndGet()
@@ -155,6 +146,34 @@ object StreamingPipeline {
     val query = StateStores.withStateConf(
       spark, conf.pipeline.stateStore)(writer.start())
     Running(query, session, source.onStop, batches)
+  }
+
+  /** `flush_interval_seconds` as a trigger. No liveness interval
+    * configured → fire as soon as data is available (interval 0), like
+    * the reference's consume loop. A fixed 1s default would CAP
+    * throughput at batch_size msgs/s (measured: the e2e daemon sat
+    * pinned at ~49k msgs/s with 50k-msg batches — the trigger floor,
+    * not the work). */
+  private def flushTrigger(conf: Conf): Trigger =
+    conf.pipeline.flushIntervalSeconds match {
+      case Some(s) => Trigger.ProcessingTime(s"$s seconds")
+      case None => Trigger.ProcessingTime(0L)
+    }
+
+  private def checkpointLocation(checkpointDir: Option[String]): String =
+    checkpointDir.getOrElse(
+      java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+
+  /** The admission daemons' emit: write + flush one trigger's
+    * survivors under the session lock, then count the trigger. */
+  private def emitSurvivors(session: Invoke.Session,
+      batches: AtomicLong): (DataFrame, Long) => Unit = { (survivors, _) =>
+    session.lock.synchronized {
+      session.sink.write(survivors)
+      session.sink.flush()
+    }
+    batches.incrementAndGet()
+    ()
   }
 
   /** The `handlers.NearDupFilter` daemon: raw JSON values → (id, text)
@@ -189,26 +208,15 @@ object StreamingPipeline {
       .select(col(s"__j.${nd.idColumn}").as(nd.idColumn),
         col(s"__j.${nd.textColumn}").as(nd.textColumn))
       .filter(col(nd.idColumn).isNotNull && col(nd.textColumn).isNotNull)
-    val trigger = conf.pipeline.flushIntervalSeconds match {
-      case Some(s) => Trigger.ProcessingTime(s"$s seconds")
-      case None => Trigger.ProcessingTime(0L)
-    }
     val query = StateStores.withStateConf(spark,
         conf.pipeline.stateStore, nd.shufflePartitions) {
       graft.operators.Dedup.streamingNearDupFilter(
           decoded, nd.idColumn, nd.textColumn, nd.stateDir,
           nd.ngram, nd.threshold, nd.numHashes, nd.bands, nd.seed,
-          checkpointDir = checkpointDir, trigger = Some(trigger),
+          checkpointDir = checkpointDir, trigger = Some(flushTrigger(conf)),
           compactEveryNTriggers = nd.compactEveryNTriggers,
-          onFoldCandidates = Some(metrics.recordNearDupFold)) {
-        (survivors, _) =>
-          session.lock.synchronized {
-            session.sink.write(survivors)
-            session.sink.flush()
-          }
-          batches.incrementAndGet()
-          ()
-      }
+          onFoldCandidates = Some(metrics.recordNearDupFold))(
+        emitSurvivors(session, batches))
     }
     Running(query, session, source.onStop, batches)
   }
@@ -243,10 +251,6 @@ object StreamingPipeline {
       .select(col(s"__j.${cd.idColumn}").as(cd.idColumn),
         col(s"__j.${cd.vecColumn}").cast("array<float>").as(cd.vecColumn))
       .filter(col(cd.idColumn).isNotNull && col(cd.vecColumn).isNotNull)
-    val trigger = conf.pipeline.flushIntervalSeconds match {
-      case Some(s) => Trigger.ProcessingTime(s"$s seconds")
-      case None => Trigger.ProcessingTime(0L)
-    }
     // startup sizing (round-11 judge ask #5): with expected_corpus
     // declared, say at START what the fold gauges will converge to.
     // An undersized banding only reaches here under on_undersized:
@@ -262,17 +266,10 @@ object StreamingPipeline {
       graft.operators.CosineDedup.streamingCosineDupFilter(
           decoded, cd.idColumn, cd.vecColumn, cd.stateDir,
           cd.threshold, cd.dim, cd.bands, cd.rowsPerBand, cd.seed,
-          checkpointDir = checkpointDir, trigger = Some(trigger),
+          checkpointDir = checkpointDir, trigger = Some(flushTrigger(conf)),
           compactEveryNTriggers = cd.compactEveryNTriggers,
-          onFoldSaturation = metrics.recordCosineSaturation) {
-        (survivors, _) =>
-          session.lock.synchronized {
-            session.sink.write(survivors)
-            session.sink.flush()
-          }
-          batches.incrementAndGet()
-          ()
-      }
+          onFoldSaturation = metrics.recordCosineSaturation)(
+        emitSurvivors(session, batches))
     }
     Running(query, session, source.onStop, batches)
   }
@@ -328,27 +325,16 @@ object StreamingPipeline {
           .filter(col(hd.idColumn).isNotNull && col(hd.w0Column).isNotNull &&
             col(hd.w1Column).isNotNull)
     }
-    val trigger = conf.pipeline.flushIntervalSeconds match {
-      case Some(s) => Trigger.ProcessingTime(s"$s seconds")
-      case None => Trigger.ProcessingTime(0L)
-    }
     val query = StateStores.withStateConf(spark,
         conf.pipeline.stateStore, hd.shufflePartitions) {
       graft.operators.HammingDedup.streamingHammingDupFilter(
           decoded, hd.idColumn, hd.w0Column, hd.w1Column, hd.stateDir,
           hd.maxHamming, checkpointDir = checkpointDir,
-          trigger = Some(trigger),
+          trigger = Some(flushTrigger(conf)),
           compactEveryNTriggers = hd.compactEveryNTriggers,
           fpStamp = graft.engine.HammingFingerprint.stamp(hd),
-          onFoldCandidates = Some(metrics.recordHammingFold)) {
-        (survivors, _) =>
-          session.lock.synchronized {
-            session.sink.write(survivors)
-            session.sink.flush()
-          }
-          batches.incrementAndGet()
-          ()
-      }
+          onFoldCandidates = Some(metrics.recordHammingFold))(
+        emitSurvivors(session, batches))
     }
     Running(query, session, source.onStop, batches)
   }
@@ -433,12 +419,8 @@ object StreamingPipeline {
       .outputMode(
         if (w.mode == "update") org.apache.spark.sql.streaming.OutputMode.Update()
         else org.apache.spark.sql.streaming.OutputMode.Append())
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString))
-      .trigger(conf.pipeline.flushIntervalSeconds match {
-        case Some(s) => Trigger.ProcessingTime(s"$s seconds")
-        case None => Trigger.ProcessingTime(0L)
-      })
+      .option("checkpointLocation", checkpointLocation(checkpointDir))
+      .trigger(flushTrigger(conf))
       .foreachBatch { (closed: Dataset[org.apache.spark.sql.Row], _: Long) =>
         // localCheckpoint FIRST, emptiness check on the materialized
         // RDD: a foreachBatch Dataset re-executes the whole micro-batch

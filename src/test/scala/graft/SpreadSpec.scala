@@ -59,6 +59,19 @@ class SpreadSpec extends SparkTestBase {
     }
   }
 
+  test("a coalesce below an exchange narrows the frame: repartition(n).coalesce(1) widens") {
+    import spark.implicits._
+    val narrowed = (1 to 500).map(i => (i.toLong, "x" * 50)).toDF("id", "t")
+      .repartition(4).coalesce(1)
+    assert(parts(narrowed) == 1)
+    withConf("graft.spread.targetBytesPerTask" -> "1024") {
+      // the exchange declares 4, but the frame runs as one task: the
+      // guard must read the coalesce, not look through it
+      val p = parts(Tables.spread(narrowed))
+      assert(p == 4, s"expected the core-count floor 4, got $p")
+    }
+  }
+
   test("already-wide frames pass through without a new exchange") {
     import spark.implicits._
     val wide = (1 to 500).map(i => (i.toLong, "x" * 50)).toDF("id", "t")
